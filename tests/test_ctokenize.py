@@ -168,15 +168,25 @@ def test_extraction_e2e_parity(spark):
 
 
 def test_kernel_config_modes():
-    from webx.extract import resolve_strip, resolve_tokenizer
+    import numpy as np
+
+    import webx.ctokenize as ck
+    from webx.extract import (
+        _tokenize_table_py, resolve_detect_final, resolve_strip, resolve_tokenize_table,
+    )
     from webx.recognize import strip_markup
 
-    assert resolve_tokenizer("off") is tokenize
+    assert resolve_tokenize_table("off") is _tokenize_table_py
     assert resolve_strip("off") is strip_markup
-    assert resolve_tokenizer("auto")(b"<p>x y z</p>") == tokenize(b"<p>x y z</p>")
+    assert resolve_detect_final("off") is None
+    assert resolve_tokenize_table("auto") is ck.tokenize_table
+    assert resolve_detect_final("auto") is ck.detect_final
+    html = b"<p>x y z</p>"
+    for c, py in zip(resolve_tokenize_table("auto")(html), _tokenize_table_py(html)):
+        assert np.array_equal(c, py)
     assert resolve_strip("auto")(b"<p>x<br>y</p>") == strip_markup(b"<p>x<br>y</p>")
     with pytest.raises(ValueError, match="unknown ckernels"):
-        resolve_tokenizer("rust")
+        resolve_tokenize_table("rust")
 
 
 @pytest.mark.parametrize("html", CORNERS, ids=range(len(CORNERS)))
@@ -304,8 +314,8 @@ def test_detect_fused_gap_mode_falls_back(monkeypatch):
     import webx.extract as ex
     from webx.config import ExtractConfig
 
-    assert ex.resolve_detect_table("off") is None
-    assert ex.resolve_detect_table("auto") is not None  # kernel built
+    assert ex.resolve_detect_final("off") is None
+    assert ex.resolve_detect_final("auto") is not None  # kernel built
 
     html = (b"<div>" + b"alpha beta gamma delta epsilon zeta " * 4
             + b"</div><nav>a b</nav><p>"

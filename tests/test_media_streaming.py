@@ -531,15 +531,12 @@ def test_table_extraction_stream_batch_parity(spark, tmp_path):
 
 
 def test_extract_mixed_stream_parity(spark, tmp_path):
-    """Streaming twin of the mixed-corpus router: AvailableNow drain of
-    a (url, payload) parquet dir == the batch extract_mixed, exceptAll
-    both ways."""
-    import pandas as pd
-
+    """The mixed-corpus router on a streaming frame: AvailableNow drain
+    of a (url, payload) parquet dir through extract_mixed == the batch
+    extract_mixed, exceptAll both ways."""
     from webx.media import png_bytes
     from webx.pdf import write_pdf, write_pdf_encrypted
     from webx.route import extract_mixed
-    from webx.streaming import extract_mixed_stream
 
     html = (
         b"<!DOCTYPE html><html><body><article><p>Prose long enough to "
@@ -562,7 +559,7 @@ def test_extract_mixed_stream_parity(spark, tmp_path):
     )
     out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     q = (
-        extract_mixed_stream(stream_in)
+        extract_mixed(stream_in)
         .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", ckpt)

@@ -5,6 +5,7 @@ hold its byte-offset invariants on ARBITRARY byte input — the
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from hypothesis import example, given, settings, strategies as st
 
 from webx.charset import decode_bytes, normalize_input_bytes, sniff_charset
@@ -22,7 +23,7 @@ tag_soup = st.lists(
          b"<script>", b"</script>", b"<!--", b"-->", b"<nav>", b"</nav>",
          b"<h1>", b"</h1>", b"text here", b"&amp;", b"&#65;", b" \t\n",
          b"<![CDATA[", b"]]>", b"<br/>", b'<p data-x="a>b">', b"\xff\xfe",
-         b"caf\xc3\xa9", b"<meta charset=gbk>", b"<"]
+         b"caf\xc3\xa9", b"<meta charset=gbk>", b"<", b'<meta charset="a\x00b">']
     ),
     max_size=30,
 ).map(b"".join)
@@ -46,9 +47,13 @@ def test_tokenize_invariants(html):
         assert 0 <= b.link_tlen <= b.tlen
 
 
+NUL_LABEL_PAGE = b'<meta charset="a\x00b"><p>x</p>'  # label with a NUL byte
+
+
 @settings(max_examples=150, deadline=None)
 @given(html_like)
 @example(b"\xff\xfe<p><p>")  # UTF-16 BOM page whose UTF-8 transcode is LONGER than the input
+@example(NUL_LABEL_PAGE)
 def test_extract_never_crashes_and_spans_valid(html):
     out = extract_batch(pd.DataFrame({"url": ["u"], "html": [html]}), CFG)
     row = out.iloc[0]
@@ -64,6 +69,39 @@ def test_extract_never_crashes_and_spans_valid(html):
         prev_end = s["end"]
         assert s["text"]
     assert isinstance(row["text"], str)
+
+
+def _html_lanes():
+    from webx.comments import split_comments_batch
+    from webx.extract import detect_batch, interleave_batch
+    from webx.markdown import render_markdown_batch
+    from webx.route import _routed_batch
+    from webx.tables import tables_batch
+
+    return {
+        "extract": extract_batch, "detect": detect_batch,
+        "interleave": interleave_batch, "tables": tables_batch,
+        "markdown": render_markdown_batch, "comments": split_comments_batch,
+        "router": lambda pdf, cfg: _routed_batch(
+            pdf.rename(columns={"html": "payload"}), cfg
+        ),
+    }
+
+
+@pytest.mark.parametrize("mode", ["auto", "off"])
+@pytest.mark.parametrize("lane", sorted(_html_lanes()))
+@settings(max_examples=40, deadline=None)
+@given(html=html_like)
+@example(html=NUL_LABEL_PAGE)
+def test_html_lane_total(lane, mode, html):
+    """Every HTML lane's batch function returns a frame on any bytes,
+    under both kernel modes, and no row of it is a caught error."""
+    cfg = ExtractConfig(min_span_chars=1, min_block_chars=1, ckernels=mode)
+    out = _html_lanes()[lane](pd.DataFrame({"url": ["u"], "html": [html]}), cfg)
+    assert isinstance(out, pd.DataFrame)
+    assert set(out["url"]) <= {"u"}
+    if "status" in out.columns:
+        assert "error" not in set(out["status"])
 
 
 @settings(max_examples=150, deadline=None)

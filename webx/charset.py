@@ -25,7 +25,6 @@ column so bad rows are counted, never hidden.
 
 from __future__ import annotations
 
-import codecs
 import re
 from typing import Tuple
 
@@ -42,6 +41,7 @@ _CHARSET_RE = re.compile(CHARSET_DECL_PATTERN.encode(), re.I)
 # (cp949). Single-byte sets Python lacks a 1:1 name for keep their
 # closest stdlib codec.
 _WHATWG_LABELS: dict = {}
+_ASCII_WS = "\t\n\f\r "
 
 
 def _reg(codec: str, *labels: str) -> None:
@@ -235,18 +235,10 @@ def _sniff_prescan(head: bytes, default: str) -> str:
 
 
 def normalize_charset_name(name: str) -> "str | None":
-    """WHATWG-registry-normalize + validate a charset label; None when
-    neither the registry nor Python knows it (callers then fall back to
-    the sniffed declaration)."""
-    label = name.strip().lower()
-    n = _WHATWG_LABELS.get(label)
-    if n is not None:
-        return n
-    try:
-        codecs.lookup(label)
-    except LookupError:
-        return None
-    return label
+    """WHATWG "get an encoding": strip ASCII whitespace, lowercase, look
+    the label up in the registry; None for any other label (callers
+    then fall back to the sniffed declaration)."""
+    return _WHATWG_LABELS.get(name.strip(_ASCII_WS).lower())
 
 
 def decode_bytes(raw: bytes, charset: str) -> Tuple[str, str, str]:

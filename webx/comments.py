@@ -45,13 +45,16 @@ from __future__ import annotations
 
 import re
 import unicodedata as _unicodedata
-from typing import Iterable, Iterator, List, Optional, Tuple
+from functools import partial
+from typing import List, Optional, Tuple
 
 import pandas as pd
+from pyspark.sql import types as T
 
 from webx.charset import normalize_input_bytes, sniff_charset
 from webx.config import ExtractConfig
 from webx.extract import _extract_doc_stage1, resolve_strip
+from webx.lane import apply_rows, map_lane
 from webx.recognize import (
     decode_span_pre,
     decode_span_rawkept,
@@ -237,73 +240,72 @@ def _decode_part(
     return text
 
 
-def split_comments_batch(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
-    out = {"url": [], "text": [], "comment_text": [], "n_comment_spans": []}
-    strip = resolve_strip(cfg.ckernels) or strip_markup
-    for url, html in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-        main_parts: List[str] = []
-        com_parts: List[str] = []
-        n_com = 0
-        if html is not None and len(html) > 0:
-            raw_doc = normalize_input_bytes(bytes(html))[: cfg.limit_side_len]
-            charset = sniff_charset(raw_doc, cfg.default_charset)
-            regions = comment_regions(raw_doc)
-            preserved = pre_regions(raw_doc)
-            _, spans, _ = _extract_doc_stage1(raw_doc, cfg)
-            for s in spans:
-                if s.score < cfg.drop_score:
+COMMENTS_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType()),
+        T.StructField("text", T.StringType()),
+        T.StructField("comment_text", T.StringType()),
+        T.StructField("n_comment_spans", T.IntegerType()),
+    ]
+)
+
+
+def comments_row(cfg: ExtractConfig, url, html):
+    """One page → one (url, text, comment_text, n_comment_spans) row."""
+    main_parts: List[str] = []
+    com_parts: List[str] = []
+    n_com = 0
+    if html is not None and len(html) > 0:
+        strip = resolve_strip(cfg.ckernels) or strip_markup
+        raw_doc = normalize_input_bytes(bytes(html))[: cfg.limit_side_len]
+        charset = sniff_charset(raw_doc, cfg.default_charset)
+        regions = comment_regions(raw_doc)
+        preserved = pre_regions(raw_doc)
+        _, spans, _ = _extract_doc_stage1(raw_doc, cfg)
+        for s in spans:
+            if s.score < cfg.drop_score:
+                continue
+            seg = s.start
+            hit = False
+            for rs, re_ in regions:
+                lo = max(rs, s.start)
+                hi = min(re_, s.end)
+                if hi <= lo:
                     continue
-                seg = s.start
-                hit = False
-                for rs, re_ in regions:
-                    lo = max(rs, s.start)
-                    hi = min(re_, s.end)
-                    if hi <= lo:
-                        continue
-                    if lo > seg:
-                        t = _decode_part(
-                            raw_doc, seg, lo, charset, preserved, strip, cfg.nfc
-                        )
-                        if t:
-                            main_parts.append(t)
-                    t = _decode_part(raw_doc, lo, hi, charset, preserved, strip, cfg.nfc)
-                    if t:
-                        com_parts.append(t)
-                        hit = True
-                    seg = hi
-                if seg < s.end:
+                if lo > seg:
                     t = _decode_part(
-                        raw_doc, seg, s.end, charset, preserved, strip, cfg.nfc
+                        raw_doc, seg, lo, charset, preserved, strip, cfg.nfc
                     )
                     if t:
                         main_parts.append(t)
-                if hit:
-                    n_com += 1
-        out["url"].append(url)
-        out["text"].append(cfg.join_sep.join(main_parts))
-        out["comment_text"].append(cfg.join_sep.join(com_parts))
-        out["n_comment_spans"].append(n_com)
-    return pd.DataFrame(out)
+                t = _decode_part(raw_doc, lo, hi, charset, preserved, strip, cfg.nfc)
+                if t:
+                    com_parts.append(t)
+                    hit = True
+                seg = hi
+            if seg < s.end:
+                t = _decode_part(
+                    raw_doc, seg, s.end, charset, preserved, strip, cfg.nfc
+                )
+                if t:
+                    main_parts.append(t)
+            if hit:
+                n_com += 1
+    return ((url, cfg.join_sep.join(main_parts), cfg.join_sep.join(com_parts), n_com),)
+
+
+def split_comments_batch(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
+    return apply_rows(
+        pdf, partial(comments_row, cfg), COMMENTS_SCHEMA.fieldNames(), ("url", "html")
+    )
 
 
 def split_comments(pages, cfg: Optional[ExtractConfig] = None):
     """pages(url, html, …) → (url, text, comment_text, n_comment_spans):
     the flagship extraction with comment-region bytes routed into a
     separate column. Narrow plan: pruned scan → one Arrow mapInPandas."""
-    from pyspark.sql import types as T
-
     cfg = cfg or ExtractConfig()
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("comment_text", T.StringType()),
-            T.StructField("n_comment_spans", T.IntegerType()),
-        ]
+    return map_lane(
+        pages.select("url", "html"), partial(comments_row, cfg), COMMENTS_SCHEMA,
+        ("url", "html"),
     )
-
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield split_comments_batch(pdf, cfg)
-
-    return pages.select("url", "html").mapInPandas(fn, schema=schema)

@@ -1,10 +1,10 @@
 """The fused two-stage extractor as an Arrow-batched ``mapInPandas`` op.
 
-One pass over each Arrow batch: tokenize every document, score ALL blocks
-of the batch in one numpy call (the batch = the reference's tensor batch,
-mindocr/data/builder.py:154-161), merge runs per document, decode spans.
-Stage boundaries are columnar hand-offs inside the same batch — the Spark
-recast of predict_system.py's det → crop → rec → merge loop
+Each lane here is a per-row function run by the lane runner
+(webx/lane.py): per document, tokenize, score its blocks, merge
+candidate runs and decode the surviving spans. Stage boundaries are
+in-memory hand-offs inside the same row — the Spark recast of
+predict_system.py's det → crop → rec → merge loop
 (tools/infer/text/predict_system.py:45-117).
 
 Also exposes the stages separately (``detect_batch`` / parity with
@@ -15,12 +15,11 @@ from __future__ import annotations
 
 import re as _re
 import unicodedata as _unicodedata
-from typing import Iterable, Iterator, List, Optional, Tuple
+from functools import lru_cache, partial
+from typing import List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
-
-from functools import lru_cache
 
 from webx.charset import (
     decode_bytes,
@@ -37,6 +36,7 @@ from webx.detect import (
     merge_runs_table,
     validate_spans,
 )
+from webx.lane import apply_rows
 from webx.recognize import (
     decode_span,
     decode_span_pre,
@@ -46,7 +46,10 @@ from webx.recognize import (
     is_ascii_compatible,
     pre_regions,
 )
+from webx.schema import DETECT_SCHEMA, INTERLEAVE_SCHEMA, extracted_schema
 from webx.tokenize import Block, tokenize
+
+EXTRACT_COLS = tuple(extracted_schema().fieldNames())
 
 
 def _resolve_kernel(mode: str, py_fn, c_name: str):
@@ -68,11 +71,6 @@ def _resolve_kernel(mode: str, py_fn, c_name: str):
             raise RuntimeError("ckernels='require' but the C kernel failed to build/load")
         return py_fn
     raise ValueError(f"unknown ckernels mode {mode!r} (expected auto|require|off)")
-
-
-@lru_cache(maxsize=4)
-def resolve_tokenizer(mode: str):
-    return _resolve_kernel(mode, tokenize, "tokenize_c")
 
 
 def _tokenize_table_py(html: bytes):
@@ -130,19 +128,6 @@ def resolve_strip_norm(mode: str):
     if mode == "off":
         return None
     return _resolve_kernel(mode, None, "strip_norm_c")
-
-
-@lru_cache(maxsize=4)
-def resolve_detect_table(mode: str):
-    """The FUSED stage-1 kernel (tokenize + scores + candidate runs in
-    one C call) or None for the decomposed path. Unlike the other
-    resolvers there is no Python twin — None routes to the reference
-    composition (tokenize_table → block_scores → merge_runs_table),
-    which is also the merge_gap > 0 path."""
-    if mode == "off":
-        return None
-    fn = _resolve_kernel(mode, None, "detect_table")
-    return fn  # None when the kernel is unavailable in "auto"
 
 
 def _extract_doc_stage1(
@@ -301,6 +286,48 @@ def _decode_spans(
     return rows, joined, conf, status
 
 
+def _extract_doc(raw: bytes, hint: Optional[str], cfg: ExtractConfig):
+    """Both stages over one non-empty document → (html, span_rows,
+    joined_text, conf, status, meta): ``html`` is the normalized,
+    truncated buffer the span offsets index, ``meta["charset"]`` the
+    codec that decoded it.
+
+    ``hint`` is the HTTP-header charset; WHATWG precedence applies — a
+    BOM wins, then the header hint, then the in-document meta."""
+    had_bom = raw[:2] in (b"\xff\xfe", b"\xfe\xff") or raw[:3] == b"\xef\xbb\xbf"
+    html = normalize_input_bytes(raw)
+    _, spans, meta = _extract_doc_stage1(html, cfg)
+    if hint and not had_bom:
+        hinted = normalize_charset_name(hint)
+        if hinted is not None:
+            meta["charset"] = hinted
+    html = html[: cfg.limit_side_len]
+    # one strict decode establishes status + the EFFECTIVE codec;
+    # spans decode with that codec (a misdeclared page must not
+    # produce mojibake while status says fallback)
+    _, status, codec = decode_bytes(html, meta["charset"])
+    meta["charset"] = codec
+    rows, joined, conf, _ = _decode_spans(html, spans, codec, cfg)
+    return html, rows, joined, conf, status, meta
+
+
+def _empty_meta(cfg: ExtractConfig) -> dict:
+    return {"html_bytes": 0, "n_blocks": 0, "truncated": False,
+            "charset": cfg.default_charset}
+
+
+def extract_row(cfg: ExtractConfig, url, html, hint=None):
+    """The flagship lane's row function → one extracted_schema row."""
+    if html is None or len(html) == 0:
+        return ((url, "", [], 0.0, "empty", _empty_meta(cfg)),)
+    _, rows, joined, conf, status, meta = _extract_doc(bytes(html), hint, cfg)
+    return ((url, joined, rows, conf, status, meta),)
+
+
+def extract_inputs(charset_col: "str | None" = None) -> Tuple[str, ...]:
+    return ("url", "html") + ((charset_col,) if charset_col else ())
+
+
 def extract_batch(
     pdf: pd.DataFrame,
     cfg: ExtractConfig,
@@ -310,98 +337,33 @@ def extract_batch(
     """Run both stages over one Arrow batch → output pandas frame.
 
     ``charset_col`` names a per-row HTTP-header charset hint column
-    (e.g. read_warc(with_charset=True)); WHATWG precedence applies —
-    a BOM wins, then the header hint, then the in-document meta."""
-    urls = pdf["url"].tolist()
-    htmls = pdf["html"].tolist()
-    hints = (
-        pdf[charset_col].tolist()
-        if charset_col and charset_col in pdf.columns
-        else None
+    (e.g. read_warc(with_charset=True))."""
+    if charset_col not in pdf.columns:
+        charset_col = None
+    return apply_rows(
+        pdf, partial(extract_row, cfg), EXTRACT_COLS, extract_inputs(charset_col),
+        passthrough,
     )
-    out = {
-        "url": urls,
-        "text": [],
-        "spans": [],
-        "conf": [],
-        "status": [],
-        "meta": [],
-    }
-    for i, html in enumerate(htmls):
-        if html is None or len(html) == 0:
-            out["text"].append("")
-            out["spans"].append([])
-            out["conf"].append(0.0)
-            out["status"].append("empty")
-            out["meta"].append(
-                {"html_bytes": 0, "n_blocks": 0, "truncated": False, "charset": cfg.default_charset}
-            )
-            continue
-        raw = bytes(html)
-        had_bom = raw[:2] in (b"\xff\xfe", b"\xfe\xff") or raw[:3] == b"\xef\xbb\xbf"
-        html = normalize_input_bytes(raw)
-        _, spans, meta = _extract_doc_stage1(html, cfg)
-        if hints is not None and not had_bom and hints[i]:
-            # HTTP-header charset outranks the sniffed meta declaration
-            hinted = normalize_charset_name(hints[i])
-            if hinted is not None:
-                meta["charset"] = hinted
-        trunc_html = html[: cfg.limit_side_len]
-        # one strict decode establishes status + the EFFECTIVE codec;
-        # spans decode with that codec (a misdeclared page must not
-        # produce mojibake while status says fallback)
-        _, cs_status, codec = decode_bytes(trunc_html, meta["charset"])
-        meta["charset"] = codec
-        rows, joined, conf, _ = _decode_spans(trunc_html, spans, codec, cfg)
-        out["text"].append(joined)
-        out["spans"].append(rows)
-        out["conf"].append(conf)
-        out["status"].append(cs_status if cs_status != "ok" else "ok")
-        out["meta"].append(meta)
-    res = pd.DataFrame(out)
-    for col in passthrough:
-        res[col] = pdf[col].values
-    return res
 
 
-def make_extract_fn(
-    cfg: ExtractConfig,
-    passthrough: Tuple[str, ...] = (),
-    charset_col: "str | None" = None,
-):
-    """mapInPandas body: Iterator[pd.DataFrame] → Iterator[pd.DataFrame]."""
-
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield extract_batch(pdf, cfg, passthrough, charset_col)
-
-    return fn
+def detect_row(cfg: ExtractConfig, url, html):
+    """Stage 1 only → one (url, spans[start,end,score,kind], meta) row."""
+    if html is None or len(html) == 0:
+        return ((url, [], _empty_meta(cfg)),)
+    _, spans, meta = _extract_doc_stage1(normalize_input_bytes(bytes(html)), cfg)
+    return ((
+        url,
+        [{"start": s.start, "end": s.end, "score": s.score, "kind": s.kind}
+         for s in spans],
+        meta,
+    ),)
 
 
 def detect_batch(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
     """Stage-1-only batch op → (url, spans[start,end,score,kind], meta)."""
-    out = {"url": pdf["url"].tolist(), "spans": [], "meta": []}
-    for html in pdf["html"].tolist():
-        if html is None or len(html) == 0:
-            out["spans"].append([])
-            out["meta"].append(
-                {"html_bytes": 0, "n_blocks": 0, "truncated": False, "charset": cfg.default_charset}
-            )
-            continue
-        _, spans, meta = _extract_doc_stage1(normalize_input_bytes(bytes(html)), cfg)
-        out["spans"].append(
-            [{"start": s.start, "end": s.end, "score": s.score, "kind": s.kind} for s in spans]
-        )
-        out["meta"].append(meta)
-    return pd.DataFrame(out)
-
-
-def make_detect_fn(cfg: ExtractConfig):
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield detect_batch(pdf, cfg)
-
-    return fn
+    return apply_rows(
+        pdf, partial(detect_row, cfg), DETECT_SCHEMA.fieldNames(), ("url", "html")
+    )
 
 
 # ---------------------------------------------------- interleaved documents
@@ -415,11 +377,7 @@ _IMG_ALT_RE = _re.compile(rb"""(?i)\balt\s*=\s*["']([^"']*)["']""")
 _WS_RE = _re.compile(r"[ \t\r\n]+")
 
 
-def interleave_batch(
-    pdf: pd.DataFrame,
-    cfg: ExtractConfig,
-    charset_col: "str | None" = None,
-) -> pd.DataFrame:
+def interleave_row(cfg: ExtractConfig, url, html, hint=None):
     """MMC4/OBELICS-style interleaved documents: per page, the DOM-order
     sequence of surviving text spans (the REAL extractor's stage-1+2)
     and ``<img>`` occurrences — the layout multimodal LLM training data
@@ -434,54 +392,38 @@ def interleave_batch(
     img, which contributes no text block; dividers that are real
     boilerplate — link farms, nav — keep spans separate, so the
     common figure-between-sections layout interleaves exactly)."""
-    out = {"url": [], "seq": [], "kind": [], "text": [], "src": [], "alt": []}
-    hints = (
-        pdf[charset_col].tolist()
-        if charset_col and charset_col in pdf.columns
-        else None
-    )
-    for i, (url, html) in enumerate(zip(pdf["url"].tolist(), pdf["html"].tolist())):
-        if html is None or len(html) == 0:
+    if html is None or len(html) == 0:
+        return ()
+    trunc, rows, _, _, _, meta = _extract_doc(bytes(html), hint, cfg)
+    codec = meta["charset"]
+    items: List[tuple] = [(r["start"], "text", r["text"], None, None) for r in rows]
+    for m in _IMG_TAG_RE.finditer(trunc):
+        attrs = m.group(1)
+        sm = _IMG_SRC_RE.search(attrs) or _IMG_LAZY_RE.search(attrs)
+        if not sm:
             continue
-        raw = bytes(html)
-        had_bom = raw[:2] in (b"\xff\xfe", b"\xfe\xff") or raw[:3] == b"\xef\xbb\xbf"
-        html = normalize_input_bytes(raw)
-        _, spans, meta = _extract_doc_stage1(html, cfg)
-        if hints is not None and not had_bom and hints[i]:
-            hinted = normalize_charset_name(hints[i])
-            if hinted is not None:
-                meta["charset"] = hinted
-        trunc = html[: cfg.limit_side_len]
-        _, _, codec = decode_bytes(trunc, meta["charset"])
-        rows, _, _, _ = _decode_spans(trunc, spans, codec, cfg)
-        items: List[tuple] = [(r["start"], "text", r["text"], None, None) for r in rows]
-        for m in _IMG_TAG_RE.finditer(trunc):
-            attrs = m.group(1)
-            sm = _IMG_SRC_RE.search(attrs) or _IMG_LAZY_RE.search(attrs)
-            if not sm:
-                continue
-            am = _IMG_ALT_RE.search(attrs)
-            src = sm.group(1).decode(codec, errors="replace")
-            alt = _WS_RE.sub(
-                " ", am.group(1).decode(codec, errors="replace")
-            ).strip() if am else ""
-            items.append((m.start(), "image", None, src, alt))
-        items.sort(key=lambda t: t[0])
-        for seq, (_, kind, text, src, alt) in enumerate(items):
-            out["url"].append(url)
-            out["seq"].append(seq)
-            out["kind"].append(kind)
-            out["text"].append(text)
-            out["src"].append(src)
-            out["alt"].append(alt)
-    res = pd.DataFrame(out)
-    res["seq"] = res["seq"].astype("int32")
-    return res
+        am = _IMG_ALT_RE.search(attrs)
+        src = sm.group(1).decode(codec, errors="replace")
+        alt = _WS_RE.sub(
+            " ", am.group(1).decode(codec, errors="replace")
+        ).strip() if am else ""
+        items.append((m.start(), "image", None, src, alt))
+    items.sort(key=lambda t: t[0])
+    return [
+        (url, seq, kind, text, src, alt)
+        for seq, (_, kind, text, src, alt) in enumerate(items)
+    ]
 
 
-def make_interleave_fn(cfg: ExtractConfig, charset_col: "str | None" = None):
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield interleave_batch(pdf, cfg, charset_col)
-
-    return fn
+def interleave_batch(
+    pdf: pd.DataFrame,
+    cfg: ExtractConfig,
+    charset_col: "str | None" = None,
+) -> pd.DataFrame:
+    """``interleave_row`` over one batch."""
+    if charset_col not in pdf.columns:
+        charset_col = None
+    return apply_rows(
+        pdf, partial(interleave_row, cfg), INTERLEAVE_SCHEMA.fieldNames(),
+        extract_inputs(charset_col),
+    )

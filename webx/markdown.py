@@ -27,24 +27,31 @@ shape `save_res` (tools/infer/text/predict_system.py:119-137).
 from __future__ import annotations
 
 import re
-from typing import Iterable, Iterator, Optional, Tuple
-
-import pandas as pd
-
-from pyspark.sql import DataFrame, functions as F
+from functools import partial
+from typing import Optional
 
 import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, types as T
 
 from webx.charset import sniff_charset
 from webx.config import ExtractConfig
 from webx.detect import Span, block_scores, expand_spans, validate_spans
 from webx.extract import _decode_spans, resolve_tokenize_table
+from webx.lane import apply_rows, map_lane
 
 _H_TAG_RE = re.compile(rb"<[hH]([1-6])[^>]*>")
 _LOOKBACK = 80  # bytes: expand_spans only widens into whitespace, so the
 # opening heading tag sits within a few bytes of the span start
 
-MARKDOWN_SCHEMA = "url string, markdown string, n_headings int, status string"
+MARKDOWN_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType()),
+        T.StructField("markdown", T.StringType()),
+        T.StructField("n_headings", T.IntegerType()),
+        T.StructField("status", T.StringType()),
+    ]
+)
 
 
 def _heading_level(html: bytes, start: int) -> Optional[int]:
@@ -114,32 +121,30 @@ def _structured_spans(html: bytes, cfg: ExtractConfig):
     return html, spans, charset, truncated
 
 
+def markdown_row(cfg: ExtractConfig, url, html):
+    """One page → one (url, markdown, n_headings, status) row."""
+    if html is None or len(html) == 0:
+        return ((url, "", 0, "empty"),)
+    html, spans, charset, _ = _structured_spans(bytes(html), cfg)
+    rows, _, _, status = _decode_spans(html, spans, charset, cfg)
+    parts = []
+    n_headings = 0
+    for r in rows:
+        if r["kind"] == "heading":
+            lvl = _heading_level(html, r["start"])
+            if lvl is None:  # <title> block: metadata, not body
+                continue
+            parts.append("#" * lvl + " " + r["text"])
+            n_headings += 1
+        else:
+            parts.append(r["text"])
+    return ((url, "\n\n".join(parts), n_headings, status),)
+
+
 def render_markdown_batch(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
-    out = {"url": pdf["url"].tolist(), "markdown": [], "n_headings": [], "status": []}
-    for html in pdf["html"].tolist():
-        if html is None or len(html) == 0:
-            out["markdown"].append("")
-            out["n_headings"].append(0)
-            out["status"].append("empty")
-            continue
-        html = bytes(html)
-        html, spans, charset, _ = _structured_spans(html, cfg)
-        rows, _, _, status = _decode_spans(html, spans, charset, cfg)
-        parts = []
-        n_headings = 0
-        for r in rows:
-            if r["kind"] == "heading":
-                lvl = _heading_level(html, r["start"])
-                if lvl is None:  # <title> block: metadata, not body
-                    continue
-                parts.append("#" * lvl + " " + r["text"])
-                n_headings += 1
-            else:
-                parts.append(r["text"])
-        out["markdown"].append("\n\n".join(parts))
-        out["n_headings"].append(n_headings)
-        out["status"].append(status)
-    return pd.DataFrame(out)
+    return apply_rows(
+        pdf, partial(markdown_row, cfg), MARKDOWN_SCHEMA.fieldNames(), ("url", "html")
+    )
 
 
 def run_markdown(
@@ -147,9 +152,7 @@ def run_markdown(
 ) -> DataFrame:
     """(url, html, …) → (url, markdown, n_headings, status)."""
     cfg = cfg or ExtractConfig()
-
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield render_markdown_batch(pdf, cfg)
-
-    return pages.select("url", "html").mapInPandas(fn, MARKDOWN_SCHEMA)
+    return map_lane(
+        pages.select("url", "html"), partial(markdown_row, cfg), MARKDOWN_SCHEMA,
+        ("url", "html"),
+    )

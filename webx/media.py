@@ -27,6 +27,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from webx.lane import map_lane
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -83,35 +85,21 @@ def synth_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _features_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+def features_row(mid, kind, payload):
     """DETERMINISTIC FAKE decode: per-payload byte statistics standing in
     for pixel/sample decoding. Real plumbing: binary → numpy → features."""
-    out = {"media_id": [], "kind": [], "n_bytes": [], "byte_sum": [], "feature": []}
-    for mid, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-        buf = np.frombuffer(bytes(payload) if payload is not None else b"", dtype=np.uint8)
-        n = int(buf.size)
-        s = int(buf.sum()) if n else 0
-        # 8-bin byte histogram, normalized — the "embedding" of the fake codec
-        hist = np.bincount(buf >> 5, minlength=8).astype(np.float64) if n else np.zeros(8)
-        feat = (hist / max(n, 1)).tolist()
-        out["media_id"].append(mid)
-        out["kind"].append(kind)
-        out["n_bytes"].append(n)
-        out["byte_sum"].append(s)
-        out["feature"].append(feat)
-    return pd.DataFrame(out)
+    buf = np.frombuffer(bytes(payload) if payload is not None else b"", dtype=np.uint8)
+    n = int(buf.size)
+    s = int(buf.sum()) if n else 0
+    # 8-bin byte histogram, normalized — the "embedding" of the fake codec
+    hist = np.bincount(buf >> 5, minlength=8).astype(np.float64) if n else np.zeros(8)
+    return ((mid, kind, n, s, (hist / max(n, 1)).tolist()),)
 
 
 def media_features(media: DataFrame) -> DataFrame:
     """(media_id, kind, n_bytes, byte_sum, feature[8]) via mapInPandas."""
-
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _features_batch(pdf)
-
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        fn, schema=FEATURES_SCHEMA
-    )
+    cols = ("media_id", "kind", "payload")
+    return map_lane(media.select(*cols), features_row, FEATURES_SCHEMA, cols)
 
 
 # ------------------------------------------------------------- image headers
@@ -441,25 +429,15 @@ def synth_image_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id").mapInPandas(fn, schema=schema)
 
 
+def image_meta_row(mid, payload):
+    return ((mid, *sniff_image_meta(payload)),)
+
+
 def image_meta(media: DataFrame, payload_col: str = "payload") -> DataFrame:
     """(media_id, fmt, width, height, valid) by parsing each payload's
     real header bytes — one Arrow mapInPandas, no shuffle."""
-
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "fmt": [], "width": [], "height": [], "valid": []}
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                fmt, w, h, ok = sniff_image_meta(payload)
-                out["media_id"].append(mid)
-                out["fmt"].append(fmt)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["valid"].append(ok)
-            yield pd.DataFrame(out)
-
-    return media.select("media_id", payload_col).mapInPandas(
-        fn, schema=IMAGE_META_SCHEMA
-    )
+    cols = ("media_id", payload_col)
+    return map_lane(media.select(*cols), image_meta_row, IMAGE_META_SCHEMA, cols)
 
 
 
@@ -647,28 +625,15 @@ def synth_audio_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id").mapInPandas(fn, schema=schema)
 
 
+def audio_meta_row(mid, payload):
+    return ((mid, *sniff_audio_meta(payload)),)
+
+
 def audio_meta(media: DataFrame, payload_col: str = "payload") -> DataFrame:
     """(media_id, fmt, sample_rate, channels, valid) by parsing real
     audio headers — one Arrow mapInPandas, no shuffle."""
-
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "media_id": [], "fmt": [], "sample_rate": [],
-                "channels": [], "valid": [],
-            }
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                fmt, sr, ch, ok = sniff_audio_meta(payload)
-                out["media_id"].append(mid)
-                out["fmt"].append(fmt)
-                out["sample_rate"].append(sr)
-                out["channels"].append(ch)
-                out["valid"].append(ok)
-            yield pd.DataFrame(out)
-
-    return media.select("media_id", payload_col).mapInPandas(
-        fn, schema=AUDIO_META_SCHEMA
-    )
+    cols = ("media_id", payload_col)
+    return map_lane(media.select(*cols), audio_meta_row, AUDIO_META_SCHEMA, cols)
 
 
 
@@ -820,29 +785,15 @@ def synth_video_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id").mapInPandas(fn, schema=schema)
 
 
+def video_meta_row(mid, payload):
+    return ((mid, *sniff_video_meta(payload)),)
+
+
 def video_meta(media: DataFrame, payload_col: str = "payload") -> DataFrame:
     """(media_id, fmt, width, height, duration_ms, valid) by parsing
     real MP4 box structure — one Arrow mapInPandas, no shuffle."""
-
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "media_id": [], "fmt": [], "width": [], "height": [],
-                "duration_ms": [], "valid": [],
-            }
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                fmt, w, h, dur, ok = sniff_video_meta(payload)
-                out["media_id"].append(mid)
-                out["fmt"].append(fmt)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["duration_ms"].append(dur)
-                out["valid"].append(ok)
-            yield pd.DataFrame(out)
-
-    return media.select("media_id", payload_col).mapInPandas(
-        fn, schema=VIDEO_META_SCHEMA
-    )
+    cols = ("media_id", payload_col)
+    return map_lane(media.select(*cols), video_meta_row, VIDEO_META_SCHEMA, cols)
 
 
 # ---------------------------------------------------------------- codec stubs
@@ -891,35 +842,24 @@ def resize_image(media: DataFrame, width: int, height: int) -> DataFrame:
         ]
     )
 
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # precomputed gather indices are shared by every image in a batch
-        for pdf in batches:
-            out = {"media_id": [], "payload": [], "meta": []}
-            for mid, payload, w0, h0, mime in zip(
-                pdf["media_id"], pdf["payload"], pdf["width"], pdf["height"], pdf["mime"]
-            ):
-                img = decode_image_bytes(
-                    bytes(payload) if payload is not None else b"", int(w0), int(h0)
-                )
-                ys = (np.arange(height) * img.shape[0] // height).clip(0, img.shape[0] - 1)
-                xs = (np.arange(width) * img.shape[1] // width).clip(0, img.shape[1] - 1)
-                resized = img[np.ix_(ys, xs)]
-                out["media_id"].append(mid)
-                out["payload"].append(resized.tobytes())
-                out["meta"].append({"mime": mime, "width": width, "height": height})
-            yield pd.DataFrame(out)
-
-    return (
-        media.filter(F.col("kind") == "image")
-        .select(
-            "media_id",
-            "payload",
-            F.col("meta.width").alias("width"),
-            F.col("meta.height").alias("height"),
-            F.col("meta.mime").alias("mime"),
+    def row(mid, payload, w0, h0, mime):
+        img = decode_image_bytes(
+            bytes(payload) if payload is not None else b"", int(w0), int(h0)
         )
-        .mapInPandas(fn, schema=out_schema)
+        ys = (np.arange(height) * img.shape[0] // height).clip(0, img.shape[0] - 1)
+        xs = (np.arange(width) * img.shape[1] // width).clip(0, img.shape[1] - 1)
+        resized = img[np.ix_(ys, xs)]
+        return ((mid, resized.tobytes(),
+                 {"mime": mime, "width": width, "height": height}),)
+
+    images = media.filter(F.col("kind") == "image").select(
+        "media_id",
+        "payload",
+        F.col("meta.width").alias("width"),
+        F.col("meta.height").alias("height"),
+        F.col("meta.mime").alias("mime"),
     )
+    return map_lane(images, row, out_schema, images.columns)
 
 
 def sample_frames(media: DataFrame, every_n: int = 2) -> DataFrame:
@@ -934,23 +874,14 @@ def sample_frames(media: DataFrame, every_n: int = 2) -> DataFrame:
         ]
     )
 
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "frame_idx": [], "frame": []}
-            for mid, payload, nf in zip(
-                pdf["media_id"], pdf["payload"], pdf["n_frames"]
-            ):
-                raw = bytes(payload) if payload is not None else b""
-                nf = max(int(nf), 1)
-                step = max(len(raw) // nf, 1)
-                for i in range(0, nf, every_n):
-                    out["media_id"].append(mid)
-                    out["frame_idx"].append(i)
-                    out["frame"].append(raw[i * step : (i + 1) * step])
-            yield pd.DataFrame(out)
+    def row(mid, payload, nf):
+        raw = bytes(payload) if payload is not None else b""
+        nf = max(int(nf), 1)
+        step = max(len(raw) // nf, 1)
+        return [(mid, i, raw[i * step : (i + 1) * step])
+                for i in range(0, nf, every_n)]
 
-    return (
-        media.filter(F.col("kind") == "video")
-        .select("media_id", "payload", F.col("meta.n_frames").alias("n_frames"))
-        .mapInPandas(fn, schema=frames_schema)
+    videos = media.filter(F.col("kind") == "video").select(
+        "media_id", "payload", F.col("meta.n_frames").alias("n_frames")
     )
+    return map_lane(videos, row, frames_schema, videos.columns)

@@ -36,10 +36,11 @@ from __future__ import annotations
 
 import re
 import zlib
-from typing import Callable, Dict, Iterable, Iterator, List, Optional, Tuple
+from typing import Callable, Dict, List, Optional, Tuple
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
+
+from webx.lane import map_lane
 
 # --------------------------------------------------------------- fixtures
 
@@ -1607,6 +1608,25 @@ PDF_OUT_SCHEMA = T.StructType(
 )
 
 
+def pdf_row(url, raw):
+    """One PDF → one PDF_OUT_SCHEMA row; unsupported constructs give
+    status='unsupported', text=''."""
+    data = bytes(raw) if raw is not None else b""
+    try:
+        text, spans = parse_pdf(data)
+        status = "ok"
+    except Exception:
+        text, spans, status = "", [], "unsupported"
+    return ((
+        url,
+        text,
+        [{"start": a, "end": b, "kind": "text"} for a, b in spans],
+        status,
+        1.0 if status == "ok" else 0.0,
+        {"html_bytes": len(data)},
+    ),)
+
+
 def extract_pdf(
     pdfs: DataFrame,
     url_col: str = "url",
@@ -1618,37 +1638,9 @@ def extract_pdf(
     extraction plan. ``passthrough`` columns ride through the batch
     unchanged (the HTML lane's passthrough contract). Unsupported
     constructs → status='unsupported', text='', no row loss."""
-    schema = T.StructType(
-        list(PDF_OUT_SCHEMA)
-        + [pdfs.schema[c] for c in passthrough]
-    )
-
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            out = {"url": [], "text": [], "spans": [], "status": [],
-                   "conf": [], "meta": []}
-            for url, raw in zip(pdf_batch[url_col], pdf_batch[pdf_col]):
-                data = bytes(raw) if raw is not None else b""
-                try:
-                    text, spans = parse_pdf(data)
-                    status = "ok"
-                except Exception:
-                    text, spans, status = "", [], "unsupported"
-                out["url"].append(url)
-                out["text"].append(text)
-                out["spans"].append(
-                    [{"start": a, "end": b, "kind": "text"} for a, b in spans]
-                )
-                out["status"].append(status)
-                out["conf"].append(1.0 if status == "ok" else 0.0)
-                out["meta"].append({"html_bytes": len(data)})
-            res = pd.DataFrame(out)
-            for c in passthrough:
-                res[c] = pdf_batch[c].to_numpy()
-            yield res
-
-    return pdfs.select(F.col(url_col), F.col(pdf_col), *passthrough).mapInPandas(
-        fn, schema=schema
+    return map_lane(
+        pdfs.select(F.col(url_col), F.col(pdf_col), *passthrough),
+        pdf_row, PDF_OUT_SCHEMA, (url_col, pdf_col), passthrough,
     )
 
 

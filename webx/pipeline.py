@@ -24,16 +24,16 @@ Scale notes (the plan this produces at 100 TB):
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Optional, Tuple
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from webx.config import ExtractConfig
-from webx.extract import make_detect_fn, make_extract_fn
-from webx.schema import DET_SPAN_TYPE, META_TYPE, extracted_schema
-
-import pyspark.sql.types as T
+from webx.extract import detect_row, extract_inputs, extract_row, interleave_row
+from webx.lane import map_lane
+from webx.schema import DETECT_SCHEMA, INTERLEAVE_SCHEMA, extracted_schema
 
 
 def partition_for_extraction(df: DataFrame, cfg: ExtractConfig) -> DataFrame:
@@ -67,8 +67,10 @@ def run_extraction(
     cols = ["url", "html", *pt, *extra]
     df = pages.select(*cols)  # column pruning reaches the scan
     df = partition_for_extraction(df, cfg)
-    out_schema = extracted_schema([pages.schema[c] for c in pt])
-    return df.mapInPandas(make_extract_fn(cfg, pt, charset_col), schema=out_schema)
+    return map_lane(
+        df, partial(extract_row, cfg), extracted_schema(),
+        extract_inputs(charset_col), pt,
+    )
 
 
 def run_interleave(
@@ -79,27 +81,17 @@ def run_interleave(
     """MMC4/OBELICS-style interleaved documents: (url, seq, kind, text,
     src, alt) — the extractor's text spans and <img> occurrences merged
     in DOM order, one row per sequence element (webx/extract.py
-    interleave_batch). Same narrow plan as run_extraction: pruned scan →
+    interleave_row). Same narrow plan as run_extraction: pruned scan →
     one mapInPandas → rows; src resolution stays a downstream column op."""
-    from webx.extract import make_interleave_fn
-
     cfg = cfg or ExtractConfig()
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("seq", T.IntegerType()),
-            T.StructField("kind", T.StringType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("src", T.StringType()),
-            T.StructField("alt", T.StringType()),
-        ]
-    )
     if charset_col is not None and charset_col not in pages.columns:
         charset_col = None
     cols = ["url", "html"] + ([charset_col] if charset_col else [])
     df = pages.select(*cols)
     df = partition_for_extraction(df, cfg)
-    return df.mapInPandas(make_interleave_fn(cfg, charset_col), schema=schema)
+    return map_lane(
+        df, partial(interleave_row, cfg), INTERLEAVE_SCHEMA, extract_inputs(charset_col)
+    )
 
 
 def image_contexts(interleaved: DataFrame) -> DataFrame:
@@ -133,16 +125,8 @@ def image_contexts(interleaved: DataFrame) -> DataFrame:
 def run_detect(pages: DataFrame, cfg: Optional[ExtractConfig] = None) -> DataFrame:
     """Stage 1 only → (url, spans, meta); debug parity with save_det_res."""
     cfg = cfg or ExtractConfig()
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("spans", T.ArrayType(DET_SPAN_TYPE)),
-            T.StructField("meta", META_TYPE),
-        ]
-    )
-    df = pages.select("url", "html")
-    df = partition_for_extraction(df, cfg)
-    return df.mapInPandas(make_detect_fn(cfg), schema=schema)
+    df = partition_for_extraction(pages.select("url", "html"), cfg)
+    return map_lane(df, partial(detect_row, cfg), DETECT_SCHEMA, ("url", "html"))
 
 
 def explode_spans(extracted: DataFrame) -> DataFrame:

@@ -9,7 +9,7 @@ function dispatches each row on its MAGIC BYTES (never the
 Content-Type header — the q_mime_route policy) into the right lane:
 
 * ``html``  → the fused two-stage extractor (webx/extract.py
-  extract_batch — same code, same C kernels, byte-identical output);
+  extract_row — same code, same C kernels, byte-identical output);
 * ``pdf``   → the text-PDF parser (webx/pdf.py parse_pdf, incl. the
   encrypted and xref-stream layouts), fail-soft 'unsupported';
 * ``image`` → the pure-struct header sniffer (webx/media.py
@@ -22,23 +22,29 @@ Content-Type header — the q_mime_route policy) into the right lane:
   a signature for arbitrary binary (the audio lane still parses MP3
   when a caller routes it explicitly).
 
-The batch function slices each Arrow batch into per-kind sub-frames and
-calls the EXISTING batch kernels on each slice (no per-row re-dispatch
-inside a lane), then reassembles in input order — so the html slice
-pays exactly the flagship's cost and the mixed pass stays one scan,
-one Python stage, zero shuffles. At 100 TB this is the plan you want:
-no three-way scan fan-out, no routing shuffle; lane skew (a PDF-heavy
+Each kind maps to the row function of its standalone lane
+(``extract_row``, ``pdf_row``, ``image_meta_row``, ``audio_meta_row``,
+``video_meta_row``), so the html row pays exactly the flagship's cost
+and the mixed pass stays one scan, one Python stage, zero shuffles. A
+row whose lane raises fails soft on its own (``status='error'``, the
+lane runner's policy). At 100 TB this is the plan you want: no
+three-way scan fan-out, no routing shuffle; lane skew (a PDF-heavy
 shard) is already handled by the upstream url-hash repartition.
 """
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator, Optional
+from functools import partial
+from typing import Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from webx.config import ExtractConfig
+from webx.extract import extract_row
+from webx.lane import apply_rows, map_lane
+from webx.media import audio_meta_row, image_meta_row, video_meta_row
+from webx.pdf import pdf_row
 
 ROUTED_SCHEMA = T.StructType(
     [
@@ -83,69 +89,56 @@ def classify_payload(b: bytes) -> str:
     return "other"
 
 
-def _routed_batch(pdf: pd.DataFrame, cfg: ExtractConfig,
-                  passthrough: tuple = ()) -> pd.DataFrame:
-    from webx.extract import extract_batch
-    from webx.media import sniff_image_meta
-    from webx.pdf import parse_pdf
+def _status(ok: bool) -> str:
+    return "ok" if ok else "unsupported"
 
-    payloads = [
-        bytes(p) if p is not None else b"" for p in pdf["payload"].tolist()
-    ]
-    kinds = [classify_payload(p) for p in payloads]
-    n = len(kinds)
-    out = {
-        "url": pdf["url"].tolist(),
-        "kind": kinds,
-        "text": [None] * n,
-        "status": ["skipped"] * n,
-        "width": [None] * n,
-        "height": [None] * n,
-        "sample_rate": [None] * n,
-        "duration_ms": [None] * n,
-    }
 
-    html_idx = [i for i, k in enumerate(kinds) if k == "html"]
-    if html_idx:
-        sub = pd.DataFrame(
-            {
-                "url": [out["url"][i] for i in html_idx],
-                "html": [payloads[i] for i in html_idx],
-            }
-        )
-        res = extract_batch(sub, cfg)
-        for i, text, status in zip(html_idx, res["text"], res["status"]):
-            out["text"][i] = text
-            out["status"][i] = status
+def _html(cfg, url, p):
+    ((_, text, _, _, status, _),) = extract_row(cfg, url, p)
+    return text, status, None, None, None, None
 
-    for i, k in enumerate(kinds):
-        if k == "pdf":
-            try:
-                text, _spans = parse_pdf(payloads[i])
-                out["text"][i], out["status"][i] = text, "ok"
-            except Exception:
-                out["text"][i], out["status"][i] = "", "unsupported"
-        elif k == "image":
-            fmt, w, h, ok = sniff_image_meta(payloads[i])
-            out["width"][i], out["height"][i] = w, h
-            out["status"][i] = "ok" if ok else "unsupported"
-        elif k == "audio":
-            from webx.media import sniff_audio_meta
 
-            fmt, sr, ch, ok = sniff_audio_meta(payloads[i])
-            out["sample_rate"][i] = sr
-            out["status"][i] = "ok" if ok else "unsupported"
-        elif k == "video":
-            from webx.media import sniff_video_meta
+def _pdf(cfg, url, p):
+    ((_, text, _, status, _, _),) = pdf_row(url, p)
+    return text, status, None, None, None, None
 
-            fmt, w, h, dur, ok = sniff_video_meta(payloads[i])
-            out["width"][i], out["height"][i] = w, h
-            out["duration_ms"][i] = dur
-            out["status"][i] = "ok" if ok else "unsupported"
-    res = pd.DataFrame(out)
-    for c in passthrough:
-        res[c] = pdf[c].to_numpy()
-    return res
+
+def _image(cfg, url, p):
+    ((_, _, w, h, ok),) = image_meta_row(url, p)
+    return None, _status(ok), w, h, None, None
+
+
+def _audio(cfg, url, p):
+    ((_, _, sr, _, ok),) = audio_meta_row(url, p)
+    return None, _status(ok), None, None, sr, None
+
+
+def _video(cfg, url, p):
+    ((_, _, w, h, dur, ok),) = video_meta_row(url, p)
+    return None, _status(ok), w, h, None, dur
+
+
+# kind → the standalone lane's row function, projected onto
+# (text, status, width, height, sample_rate, duration_ms)
+_LANES = {"html": _html, "pdf": _pdf, "image": _image, "audio": _audio,
+          "video": _video}
+
+
+def routed_row(cfg: ExtractConfig, url, payload):
+    """One capture → one ROUTED_SCHEMA row; kind 'other' is skipped."""
+    payload = bytes(payload) if payload is not None else b""
+    kind = classify_payload(payload)
+    lane = _LANES.get(kind)
+    if lane is None:
+        return ((url, kind, None, "skipped", None, None, None, None),)
+    return ((url, kind, *lane(cfg, url, payload)),)
+
+
+def _routed_batch(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
+    """``routed_row`` over one (url, payload) batch."""
+    return apply_rows(
+        pdf, partial(routed_row, cfg), ROUTED_SCHEMA.fieldNames(), ("url", "payload")
+    )
 
 
 def extract_mixed(
@@ -159,22 +152,15 @@ def extract_mixed(
     height, sample_rate, duration_ms): one pruned scan, one Arrow pass,
     per-row magic-byte dispatch into the existing lane kernels.
     ``passthrough`` columns ride through unchanged (the extract_pdf
-    contract)."""
+    contract). Works unchanged on a streaming frame."""
     cfg = cfg or ExtractConfig()
-    schema = T.StructType(
-        list(ROUTED_SCHEMA) + [captures.schema[c] for c in passthrough]
+    df = captures.select(
+        F.col(url_col).alias("url"),
+        F.col(payload_col).alias("payload"),
+        *passthrough,
     )
-
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _routed_batch(pdf, cfg, passthrough)
-
-    return (
-        captures.select(
-            F.col(url_col).alias("url"),
-            F.col(payload_col).alias("payload"),
-            *passthrough,
-        ).mapInPandas(fn, schema=schema)
+    return map_lane(
+        df, partial(routed_row, cfg), ROUTED_SCHEMA, ("url", "payload"), passthrough
     )
 
 

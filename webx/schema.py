@@ -61,6 +61,26 @@ DET_SPAN_TYPE = T.StructType(
     ]
 )
 
+DETECT_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType()),
+        T.StructField("spans", T.ArrayType(DET_SPAN_TYPE)),
+        T.StructField("meta", META_TYPE),
+    ]
+)
+
+# interleaved documents: one row per text span or <img>, in DOM order
+INTERLEAVE_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType()),
+        T.StructField("seq", T.IntegerType()),
+        T.StructField("kind", T.StringType()),
+        T.StructField("text", T.StringType()),
+        T.StructField("src", T.StringType()),
+        T.StructField("alt", T.StringType()),
+    ]
+)
+
 LINEAGE_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType()),

@@ -28,10 +28,21 @@ from typing import Iterable, Iterator, List, Optional, Tuple
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from webx.lane import map_lane
+
 WARC_PAGES_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType()),
         T.StructField("warc_ts", T.TimestampType()),
+        T.StructField("html", T.BinaryType()),
+    ]
+)
+WARC_RECORDS_SCHEMA = T.StructType(
+    [
+        T.StructField("kind", T.StringType()),
+        T.StructField("url", T.StringType()),
+        T.StructField("warc_ts", T.TimestampType()),
+        T.StructField("digest", T.StringType()),
         T.StructField("html", T.BinaryType()),
     ]
 )
@@ -291,6 +302,28 @@ def parse_warc_records(
     return out
 
 
+def _files(spark: SparkSession, path: str) -> DataFrame:
+    """One ``binaryFile`` row per input file, content only."""
+    return spark.read.format("binaryFile").load(path).select("content")
+
+
+def _naive(ts: Optional[datetime]) -> Optional[datetime]:
+    return None if ts is None else ts.replace(tzinfo=None)
+
+
+def _ts_rows(parse, ts_at: int):
+    """Row function for a container reader: ``parse(content)``'s records,
+    with the timestamp at position ``ts_at`` made naive for Spark."""
+
+    def row(content):
+        return [
+            (*r[:ts_at], _naive(r[ts_at]), *r[ts_at + 1 :])
+            for r in parse(bytes(content))
+        ]
+
+    return row
+
+
 def read_warc(
     spark: SparkSession, path: str, with_charset: bool = False
 ) -> DataFrame:
@@ -299,66 +332,22 @@ def read_warc(
     mapInPandas. ``with_charset=True`` adds the HTTP-header-declared
     charset column ('' when absent) for run_extraction's
     ``charset_col`` — the WHATWG-precedence decode hint."""
-    files = spark.read.format("binaryFile").load(path).select("content")
-
+    files = _files(spark, path)
     if with_charset:
         schema = T.StructType(
             [*WARC_PAGES_SCHEMA.fields, T.StructField("http_charset", T.StringType())]
         )
-
-        def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = {"url": [], "warc_ts": [], "html": [], "http_charset": []}
-                for content in pdf["content"]:
-                    for url, ts, html, cs in parse_warc_meta(bytes(content)):
-                        rows["url"].append(url)
-                        rows["warc_ts"].append(
-                            None if ts is None else ts.replace(tzinfo=None)
-                        )
-                        rows["html"].append(html)
-                        rows["http_charset"].append(cs)
-                yield pd.DataFrame(rows)
-
-        return files.mapInPandas(fn, schema=schema)
-
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"url": [], "warc_ts": [], "html": []}
-            for content in pdf["content"]:
-                for url, ts, html in parse_warc(bytes(content)):
-                    rows["url"].append(url)
-                    rows["warc_ts"].append(
-                        None if ts is None else ts.replace(tzinfo=None)
-                    )
-                    rows["html"].append(html)
-            yield pd.DataFrame(rows)
-
-    return files.mapInPandas(fn, schema=WARC_PAGES_SCHEMA)
+        return map_lane(files, _ts_rows(parse_warc_meta, 1), schema, ("content",))
+    return map_lane(files, _ts_rows(parse_warc, 1), WARC_PAGES_SCHEMA, ("content",))
 
 
 def read_warc_records(spark: SparkSession, path: str) -> DataFrame:
     """WARC archive(s) → (kind, url, warc_ts, digest, html) including
     revisit records (html = empty, digest points at the original
     response). Distributed like read_warc."""
-    files = spark.read.format("binaryFile").load(path).select("content")
-
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"kind": [], "url": [], "warc_ts": [], "digest": [], "html": []}
-            for content in pdf["content"]:
-                for kind, url, ts, digest, html in parse_warc_records(bytes(content)):
-                    rows["kind"].append(kind)
-                    rows["url"].append(url)
-                    rows["warc_ts"].append(
-                        None if ts is None else ts.replace(tzinfo=None)
-                    )
-                    rows["digest"].append(digest)
-                    rows["html"].append(html)
-            yield pd.DataFrame(rows)
-
-    return files.mapInPandas(
-        fn,
-        schema="kind string, url string, warc_ts timestamp, digest string, html binary",
+    return map_lane(
+        _files(spark, path), _ts_rows(parse_warc_records, 2), WARC_RECORDS_SCHEMA,
+        ("content",),
     )
 
 
@@ -651,27 +640,17 @@ def read_keyed_store(
         .select("path", "content")
     )
 
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bases_map = b_bases.value
-        for pdf in batches:
-            rows = {"global_idx": [], "key": [], "label": [], "value": []}
-            from urllib.parse import unquote, urlparse
+    def row(p, content):
+        from urllib.parse import unquote, urlparse
 
-            for p, content in zip(pdf["path"], pdf["content"]):
-                base = bases_map[os.path.basename(unquote(urlparse(p).path))]
-                for i, (key, label, value) in enumerate(
-                    parse_keyed_shard(bytes(content))
-                ):
-                    gidx = base + i
-                    if gidx >= cutoff:
-                        continue
-                    rows["global_idx"].append(gidx)
-                    rows["key"].append(key)
-                    rows["label"].append(label)
-                    rows["value"].append(value)
-            yield pd.DataFrame(rows)
+        base = b_bases.value[os.path.basename(unquote(urlparse(p).path))]
+        return [
+            (base + i, key, label, value)
+            for i, (key, label, value) in enumerate(parse_keyed_shard(bytes(content)))
+            if base + i < cutoff
+        ]
 
-    return files.mapInPandas(fn, schema=KEYED_SCHEMA)
+    return map_lane(files, row, KEYED_SCHEMA, ("path", "content"))
 
 
 # ------------------------------------------------------------------ WET lane
@@ -757,21 +736,7 @@ def parse_wet(raw: bytes) -> "List[Tuple[str, Optional[datetime], str]]":
 def read_wet(spark: SparkSession, path: str) -> DataFrame:
     """WET shard(s) → (url, wet_ts, text); parsing runs distributed, one
     input file per binaryFile row."""
-    files = spark.read.format("binaryFile").load(path).select("content")
-
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"url": [], "wet_ts": [], "text": []}
-            for content in pdf["content"]:
-                for url, ts, text in parse_wet(bytes(content)):
-                    rows["url"].append(url)
-                    rows["wet_ts"].append(
-                        None if ts is None else ts.replace(tzinfo=None)
-                    )
-                    rows["text"].append(text)
-            yield pd.DataFrame(rows)
-
-    return files.mapInPandas(fn, schema=WET_SCHEMA)
+    return map_lane(_files(spark, path), _ts_rows(parse_wet, 1), WET_SCHEMA, ("content",))
 
 
 def write_wet_dir(df: DataFrame, out_dir: str) -> "List[Tuple[str, int]]":
@@ -916,22 +881,7 @@ def read_wat(spark: SparkSession, path: str) -> DataFrame:
     """WAT shard(s) → (url, wat_ts, title, links). One file per
     binaryFile row, parsing distributed in mapInPandas — same plan
     shape as read_warc/read_wet."""
-    files = spark.read.format("binaryFile").load(path).select("content")
-
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"url": [], "wat_ts": [], "title": [], "links": []}
-            for content in pdf["content"]:
-                for url, ts, title, links in parse_wat(bytes(content)):
-                    rows["url"].append(url)
-                    rows["wat_ts"].append(
-                        None if ts is None else ts.replace(tzinfo=None)
-                    )
-                    rows["title"].append(title)
-                    rows["links"].append(links)
-            yield pd.DataFrame(rows)
-
-    return files.mapInPandas(fn, schema=WAT_SCHEMA)
+    return map_lane(_files(spark, path), _ts_rows(parse_wat, 1), WAT_SCHEMA, ("content",))
 
 
 def write_wat_dir(df: DataFrame, out_dir: str) -> "List[Tuple[str, int]]":
@@ -1018,33 +968,20 @@ def read_warc_http(
     """WARC archive(s) → (url, warc_ts, html, <one string column per
     requested HTTP header>, lowercased with dashes → underscores; ''
     when the capture lacks the header). Distributed like read_warc."""
-    files = spark.read.format("binaryFile").load(path).select("content")
-    cols = [n.lower().replace("-", "_") for n in names]
     schema = T.StructType(
         [
             *WARC_PAGES_SCHEMA.fields,
-            *(T.StructField(c, T.StringType()) for c in cols),
+            *(T.StructField(n.lower().replace("-", "_"), T.StringType()) for n in names),
         ]
     )
 
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"url": [], "warc_ts": [], "html": []}
-            rows.update({c: [] for c in cols})
-            for content in pdf["content"]:
-                for url, ts, html, vals in parse_warc_http(
-                    bytes(content), names
-                ):
-                    rows["url"].append(url)
-                    rows["warc_ts"].append(
-                        None if ts is None else ts.replace(tzinfo=None)
-                    )
-                    rows["html"].append(html)
-                    for c, v in zip(cols, vals):
-                        rows[c].append(v)
-            yield pd.DataFrame(rows)
+    def row(content):
+        return [
+            (url, _naive(ts), html, *vals)
+            for url, ts, html, vals in parse_warc_http(bytes(content), names)
+        ]
 
-    return files.mapInPandas(fn, schema=schema)
+    return map_lane(_files(spark, path), row, schema, ("content",))
 
 
 def write_warc_requests(
@@ -1094,20 +1031,12 @@ def read_warc_requests(spark: SparkSession, path: str) -> DataFrame:
     """WARC archive(s) → (url, req_ts) from request records,
     distributed — the input to politeness auditing (per-host
     inter-request gaps)."""
-    files = spark.read.format("binaryFile").load(path).select("content")
-
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"url": [], "req_ts": []}
-            for content in pdf["content"]:
-                for url, ts in parse_warc_requests(bytes(content)):
-                    rows["url"].append(url)
-                    rows["req_ts"].append(
-                        None if ts is None else ts.replace(tzinfo=None)
-                    )
-            yield pd.DataFrame(rows)
-
-    return files.mapInPandas(fn, schema="url string, req_ts timestamp")
+    schema = T.StructType(
+        [T.StructField("url", T.StringType()), T.StructField("req_ts", T.TimestampType())]
+    )
+    return map_lane(
+        _files(spark, path), _ts_rows(parse_warc_requests, 1), schema, ("content",)
+    )
 
 
 def sniff_mime(html_col: str = "html") -> "F.Column":

@@ -3,8 +3,9 @@
 The reference is batch-only (SURVEY.md §2.10) — its "streaming" is
 bounded producer/consumer queues in the multiprocess runtime
 (deploy/py_infer/src/parallel/framework/module_manager.py:89-93). We add
-the real thing on top of the same stage functions: ``readStream`` over
-the input table → the identical fused ``mapInPandas`` extractor →
+the real thing on top of the same lanes: ``readStream`` over the input
+table → ``run_extraction`` itself (any stateless lane — extract_mixed,
+run_table_extraction — takes a streaming frame unchanged) →
 ``writeStream`` with exactly-once file-sink semantics. Incremental
 ingestion of new crawl files therefore reuses byte-identical extraction
 logic; ``Trigger.AvailableNow`` drains the backlog and stops (the
@@ -21,8 +22,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from webx.config import ExtractConfig
-from webx.extract import make_extract_fn
-from webx.schema import PAGES_SCHEMA, extracted_schema
+from webx.pipeline import run_extraction
+from webx.schema import PAGES_SCHEMA
 
 
 def read_pages_stream(
@@ -32,14 +33,6 @@ def read_pages_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(input_path)
-
-
-def extract_stream(pages: DataFrame, cfg: Optional[ExtractConfig] = None) -> DataFrame:
-    """Same fused extractor as batch ``run_extraction`` on a streaming DF
-    (stateless mapInPandas — no shuffle, no state store)."""
-    cfg = cfg or ExtractConfig()
-    df = pages.select("url", "html")
-    return df.mapInPandas(make_extract_fn(cfg, ()), schema=extracted_schema())
 
 
 def run_extraction_stream(
@@ -54,7 +47,7 @@ def run_extraction_stream(
     ``output_path``; file-source + checkpoint give exactly-once per input
     file, so re-runs only process files added since the last drain."""
     pages = read_pages_stream(spark, input_path)
-    extracted = extract_stream(pages, cfg).select(
+    extracted = run_extraction(pages, cfg).select(
         "url", "text", "conf", "status", F.to_json("spans").alias("spans_json")
     )
     writer = (
@@ -66,22 +59,6 @@ def run_extraction_stream(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def extract_mixed_stream(captures: DataFrame, cfg: Optional[ExtractConfig] = None) -> DataFrame:
-    """Streaming twin of webx.route.extract_mixed: the same magic-byte
-    routed batch function on a streaming (url, payload) frame —
-    stateless mapInPandas, no shuffle, no state store; batch parity
-    asserted in tests/test_media_streaming.py."""
-    from webx.route import ROUTED_SCHEMA, _routed_batch
-
-    cfg = cfg or ExtractConfig()
-
-    def fn(batches):
-        for pdf in batches:
-            yield _routed_batch(pdf, cfg)
-
-    return captures.select("url", "payload").mapInPandas(fn, schema=ROUTED_SCHEMA)
 
 
 # ---------------------------------------------- custom stateful operators

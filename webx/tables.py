@@ -61,12 +61,15 @@ driver collect; output explodes to one row per cell.
 from __future__ import annotations
 
 import re
-from typing import Iterable, Iterator, List, Optional, Tuple
+from functools import partial
+from typing import List, Optional, Tuple
 
 import pandas as pd
+from pyspark.sql import types as T
 
 from webx.charset import normalize_input_bytes, sniff_charset
 from webx.config import ExtractConfig
+from webx.lane import apply_rows, map_lane
 from webx.recognize import _COMMENT_RE, _RAWTEXT_RE, decode_span
 
 # quote-aware structural tag (the _BLOCKTAG_RE attr grammar): a quoted
@@ -246,50 +249,45 @@ def parse_tables(html: bytes, charset: str) -> List[dict]:
     return out
 
 
+TABLES_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType()),
+        T.StructField("table_idx", T.IntegerType()),
+        T.StructField("row_idx", T.IntegerType()),
+        T.StructField("col_idx", T.IntegerType()),
+        T.StructField("header", T.BooleanType()),
+        T.StructField("cell", T.StringType()),
+        T.StructField("caption", T.StringType()),
+    ]
+)
+
+
+def tables_row(cfg: ExtractConfig, url, html):
+    """One page → one row per data-table cell."""
+    if html is None or len(html) == 0:
+        return ()
+    raw = normalize_input_bytes(bytes(html))[: cfg.limit_side_len]
+    charset = sniff_charset(raw, cfg.default_charset)
+    return [
+        (url, t_idx, r_idx, c_idx, is_th, cell, tab["caption"])
+        for t_idx, tab in enumerate(parse_tables(raw, charset))
+        for r_idx, row in enumerate(tab["rows"])
+        for c_idx, (is_th, cell) in enumerate(row)
+    ]
+
+
 def tables_batch(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
-    out = {
-        "url": [], "table_idx": [], "row_idx": [], "col_idx": [],
-        "header": [], "cell": [], "caption": [],
-    }
-    for url, html in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-        if html is None or len(html) == 0:
-            continue
-        raw = normalize_input_bytes(bytes(html))[: cfg.limit_side_len]
-        charset = sniff_charset(raw, cfg.default_charset)
-        for t_idx, tab in enumerate(parse_tables(raw, charset)):
-            for r_idx, row in enumerate(tab["rows"]):
-                for c_idx, (is_th, cell) in enumerate(row):
-                    out["url"].append(url)
-                    out["table_idx"].append(t_idx)
-                    out["row_idx"].append(r_idx)
-                    out["col_idx"].append(c_idx)
-                    out["header"].append(is_th)
-                    out["cell"].append(cell)
-                    out["caption"].append(tab["caption"])
-    return pd.DataFrame(out)
+    return apply_rows(
+        pdf, partial(tables_row, cfg), TABLES_SCHEMA.fieldNames(), ("url", "html")
+    )
 
 
 def run_table_extraction(pages, cfg: Optional[ExtractConfig] = None):
     """pages(url, html, …) → one row per data-table cell:
     (url, table_idx, row_idx, col_idx, header, cell, caption).
     Narrow plan: pruned two-column scan → one Arrow mapInPandas."""
-    from pyspark.sql import types as T
-
     cfg = cfg or ExtractConfig()
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("table_idx", T.IntegerType()),
-            T.StructField("row_idx", T.IntegerType()),
-            T.StructField("col_idx", T.IntegerType()),
-            T.StructField("header", T.BooleanType()),
-            T.StructField("cell", T.StringType()),
-            T.StructField("caption", T.StringType()),
-        ]
+    return map_lane(
+        pages.select("url", "html"), partial(tables_row, cfg), TABLES_SCHEMA,
+        ("url", "html"),
     )
-
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield tables_batch(pdf, cfg)
-
-    return pages.select("url", "html").mapInPandas(fn, schema=schema)
